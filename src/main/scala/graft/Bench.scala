@@ -93,11 +93,11 @@ object Bench {
       }
     val qs = results.map { case (k, (v, _)) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    // Only queries where a SECOND run happened (first != best) get a
-    // first_secs entry — first == best for every single-run query, so
-    // omitting them loses nothing and keeps the big line well inside
-    // the driver's stdout-tail capture window (the r20 truncation cut
-    // a ~4.5 KB line; a full 109-entry duplicate map would double it).
+    // A first_secs entry appears only when run 1 differs from the best
+    // run. No entry means first == best (read `queries`): a single run,
+    // a retry no faster than run 1, or a retry that threw. Emitting an
+    // entry for every retry would double the big line, which the
+    // stdout-tail capture window already constrains.
     val firsts = results.collect { case (k, (v, w)) if w != v =>
       s"\"" + k + "\":" + w }
       .mkString("{", ",", "}")

@@ -32,27 +32,15 @@ object GraftSession {
 
   def local(cpus: Int): SparkSession = {
     val s = builder(s"local[$cpus]", math.max(cpus, 4))
-      // r22 streaming-drain fix (measured, guide §1/§5): on file://
-      // checkpoints WITHOUT native Hadoop libs, the default FileContext-
-      // based manager resolves every path through
-      // AbstractFileSystem.getFileLinkStatus, which Hadoop implements by
-      // FORKING a `readlink` (and `chmod` for permissioned creates)
-      // process per file operation — measured 12,725 forks and
-      // 75–175 ms per state-store commit on ONE q58 drain, ~2× the
-      // query's wall time. The FileSystem-API manager hits the java.io
-      // stat path instead (no exec). Same rename-based atomic-write
-      // protocol, checkpoint layout unchanged. LOCAL ONLY: the cluster
-      // preset keeps Spark's FileContext default, which is the
-      // preferred manager where a real HDFS/object-store scheme (and
-      // libhadoop) exists. Measured q58 5.0→2.9 s isolated.
+      // Local file:// checkpoints use the FileSystem-API manager: without
+      // native Hadoop libs the FileContext default forks a `readlink`/
+      // `chmod` process per checkpoint file op. Same rename-based atomic
+      // writes and layout. The cluster preset keeps Spark's default.
       .config("spark.sql.streaming.checkpointFileManagerClass",
         FsCheckpointManager)
-      // r22: Spark 4.1's per-file checkpoint CHECKSUMS (a new-in-4.1
-      // integrity layer for remote checkpoint stores) double the
-      // metadata-file count per commit — on local file:// the sidecar
-      // buys nothing (same disk, same failure domain) and costs ~1,300
-      // forked file ops per drain. Cluster preset keeps the 4.1
-      // default. Restores the ≤4.0 local checkpoint layout.
+      // Per-file checkpoint checksums guard remote stores; on a local
+      // disk (one failure domain) they only double the metadata files
+      // per commit. The cluster preset keeps Spark's default.
       .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
@@ -126,10 +114,11 @@ object GraftSession {
       case (b, (k, v)) => b.config(k, v)
     }
 
-  /** Retire an engine session: evict every standing frame the registry
-    * caches on its behalf (the LSH pair set, IVF cells, admission
-    * bloom/index, funnel stages, ...) so its pinned executor memory is
-    * actually released. A long-lived process that drops one session
+  /** Retire an engine session: evict every memo the registry holds on
+    * its behalf (the LSH pair set, IVF cells and centroids, admission
+    * bloom/index, funnel stages, staged stream fixtures, ...) so its
+    * pinned executor memory and staged dirs are actually released. A
+    * long-lived process that drops one session
     * (`newSession` clones, notebook rotation) calls this instead of —
     * or before — `SparkSession.stop`; stopping the whole SparkContext
     * also works, but only because the sweep on the next build path

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{QueryPack, Tables}
+import graft.queries.StreamingQueries.Fixtures
 import graft.ext.Similarity
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -88,56 +89,41 @@ object SimilarityQueries extends QueryPack {
       withB.drop("embedding").cache()
     })
 
-  /** Trained IVF centroids, memoized per data dir — training is
+  /** Trained IVF centroids, memoized per (session, dir): training is
     * deterministic, so q50/q57/q59 (and repeated bench runs) share one
-    * training pass instead of re-running Lloyd each time. When a
-    * persisted IVF artifact exists for the session, the FIRST centroid
-    * consumer routes through [[corpusCells]] so the artifact's
-    * build-time matrix seeds this memo — without this, an IVF query
-    * that touches centroids before cells (q69/q73/q79) would re-run
-    * Lloyd training in a restarted process even though the artifact
-    * carries the matrix. */
-  private val centCache =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[Array[Double]]]
+    * training pass. When a persisted IVF artifact exists for the
+    * session, the matrix comes from the standing [[ivfArtifacts]] pair
+    * instead — probes must assign against the exact build-time matrix,
+    * and a restarted session must not re-run Lloyd for a matrix the
+    * artifact carries. */
+  private[graft] val centCache = graft.runtime.FrameCache.of[
+      (SparkSession, String), Seq[Array[Double]]](
+    "ivf-centroids", k => Some(k._1))(_ => ())
   private def trainCentroids(s: SparkSession, d: String): Seq[Array[Double]] =
-    centCache.getOrElseUpdate(d, Similarity.trainKmeans(
+    centCache.get((s, d))(Similarity.trainKmeans(
       prepped(s, d).filter(col("vec_id") % 2 === 0), IvfK, IvfIters, Dims))
-  private def centroids(s: SparkSession, d: String): Seq[Array[Double]] =
-    centCache.getOrElse(d, {
-      import graft.sinks.ArtifactStore
-      if (ArtifactStore.configuredDir(s, "ivf-index", d)
-          .exists(ArtifactStore.exists)) {
-        corpusCells(s, d) // load (or rebuild) seeds the memo
-        centCache.getOrElse(d, trainCentroids(s, d))
-      } else trainCentroids(s, d)
-    })
+  private def centroids(s: SparkSession, d: String): Seq[Array[Double]] = {
+    import graft.sinks.ArtifactStore
+    if (ArtifactStore.configuredDir(s, "ivf-index", d).exists(ArtifactStore.exists))
+      ivfArtifacts(s, d)._2
+    else trainCentroids(s, d)
+  }
 
-  /** Trained PQ codebooks, memoized per data dir (plain doubles — not
-    * session-bound, same lifecycle as [[centroids]]). */
-  private val pqCache =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[Seq[Array[Double]]]]
+  /** Trained PQ codebooks, memoized per (session, dir). */
+  private val pqCache = graft.runtime.FrameCache.of[
+      (SparkSession, String), Seq[Seq[Array[Double]]]](
+    "pq-codebooks", k => Some(k._1))(_ => ())
   private def pqCodebooks(s: SparkSession, d: String): Seq[Seq[Array[Double]]] =
-    pqCache.getOrElseUpdate(d, Similarity.trainPq(
+    pqCache.get((s, d))(Similarity.trainPq(
       prepped(s, d).filter(col("vec_id") % 2 === 0), PqSubs, PqK, PqIters, Dims))
 
-  /** On-disk (vec_id, ne) parquet staging of the normalized corpus —
-    * the q73 stream's input. Memoized per data dir like the streaming
-    * fixtures (holds only a path, safe across session restarts). */
-  private val ingestFixCache = scala.collection.concurrent.TrieMap.empty[String, String]
-  private def ingestFixture(s: SparkSession, d: String): String =
-    ingestFixCache.getOrElseUpdate(d, {
-      val tmp = Files.createTempDirectory("graft_ingest_in_").toString
-      prepped(s, d).select(col("vec_id"), col("ne"))
-        .write.mode("overwrite").parquet(tmp)
-      tmp
-    })
-
   /** Query-set modulus: corpus_count / TargetQueries (≥1), memoized per
-    * dir (a pure count — parquet metadata, no scan). Spark filter and
-    * DuckDB oracle ([[qModSql]]) derive the same number. */
-  private val modCache = scala.collection.concurrent.TrieMap.empty[String, Long]
+    * (session, dir) (a pure count — parquet metadata, no scan). Spark
+    * filter and DuckDB oracle ([[qModSql]]) derive the same number. */
+  private[graft] val modCache = graft.runtime.FrameCache.of[(SparkSession, String), Long](
+    "query-modulus", k => Some(k._1))(_ => ())
   private def queryModulus(s: SparkSession, d: String): Long =
-    modCache.getOrElseUpdate(d,
+    modCache.get((s, d))(
       math.max(1L, Tables.embeddings(s, d).count() / TargetQueries))
 
   /** Marks the ~TargetQueries evaluation query vectors. */
@@ -220,13 +206,18 @@ object SimilarityQueries extends QueryPack {
     * cells. Assignment is a pure map-side expression against the
     * literal centroid matrix (no crossJoin/window); the only shuffle is
     * the cell equi-join against the BROADCAST probe set. */
-  /** The standing IVF inverted index: every corpus vector exploded to
-    * its top-[[IvfAssignN]] cells — memoized AND CACHED per (session,
-    * dir) because it serves BOTH the batch candidate build and the
-    * q111 streaming search (at cluster scale: the cell-partitioned
-    * index table q73 materializes). */
-  private val cellsCache = graft.runtime.FrameCache.frames("ivf-cells")
-  private def corpusCells(s: SparkSession, d: String): DataFrame =
+  /** The standing IVF artifacts that
+    * [[graft.sinks.ArtifactStore.saveIvfIndex]] persists: the inverted
+    * index (every corpus vector exploded to its top-[[IvfAssignN]]
+    * cells) paired with the centroid matrix it was assigned against.
+    * Memoized AND CACHED per (session, dir) because it serves BOTH the
+    * batch candidate build and the q111 streaming search (at cluster
+    * scale: the cell-partitioned index table q73 materializes). */
+  private val cellsCache = graft.runtime.FrameCache.of[
+      (SparkSession, String), (DataFrame, Seq[Array[Double]])](
+    "ivf-cells", k => Some(k._1))(v => { v._1.unpersist(); () })
+  private[graft] def ivfArtifacts(s: SparkSession, d: String)
+      : (DataFrame, Seq[Array[Double]]) =
     cellsCache.get((s, d))({
       import graft.sinks.ArtifactStore
       // fingerprint THIS session's corpus once (one cheap aggregate);
@@ -246,14 +237,10 @@ object SimilarityQueries extends QueryPack {
         (cells, cents)
       })({ case ((cells, cents), dir) =>
         ArtifactStore.saveIvfIndex(cells, cents, dir, snap)
-      })({ dir =>
-        // restart path: load cells AND centroids together (the probe
-        // must assign against the exact build-time matrix), seeding
-        // the centroid memo so every IVF consumer shares them
-        val (cells, cents) = ArtifactStore.loadIvfIndex(s, dir, snap)
-        centCache.put(d, cents)
-        (cells, cents)
-      })._1
+      })(
+        // restart path: cells AND centroids load together — the probe
+        // must assign against the exact build-time matrix
+        ArtifactStore.loadIvfIndex(s, _, snap))
     })
 
   /** Fingerprint of the raw embedding corpus the IVF artifacts index. */
@@ -263,9 +250,10 @@ object SimilarityQueries extends QueryPack {
       Tables.embeddings(s, d).select(col("vec_id"), col("embedding")),
       Seq("vec_id", "embedding"))
 
-  private def buildIvfCandidates(s: SparkSession, d: String): DataFrame =
-    ivfCandidatesFrom(corpusCells(s, d), centroids(s, d),
-      prepped(s, d).filter(isQuery(s, d)))
+  private def buildIvfCandidates(s: SparkSession, d: String): DataFrame = {
+    val (cells, cents) = ivfArtifacts(s, d)
+    ivfCandidatesFrom(cells, cents, prepped(s, d).filter(isQuery(s, d)))
+  }
 
   /** IVF candidates from EXPLICIT index artifacts — the seam that lets
     * a session probe a loaded ([[graft.sinks.ArtifactStore]]) index it
@@ -283,12 +271,6 @@ object SimilarityQueries extends QueryPack {
       .select(col("q_id"), col("qe"), col("vec_id"), col("ne"))
       .distinct()
   }
-
-  /** The standing IVF artifacts (inverted index + centroid matrix) for
-    * `d` — what [[graft.sinks.ArtifactStore.saveIvfIndex]] persists. */
-  private[graft] def ivfArtifacts(s: SparkSession, d: String)
-      : (DataFrame, Seq[Array[Double]]) =
-    (corpusCells(s, d), centroids(s, d))
 
   /** The normalized (vec_id, ne) corpus frame (spec probe-set seam). */
   private[graft] def preppedEmbeddings(s: SparkSession, d: String): DataFrame =
@@ -609,10 +591,13 @@ object SimilarityQueries extends QueryPack {
     "q73_stream_index_ingest" -> ((s, d) => {
       val cb = pqCodebooks(s, d)
       val cents = centroids(s, d)
-      val in = ingestFixture(s, d)
+      val in = Fixtures.dir(s, "ingest", d) { fx =>
+        prepped(s, d).select(col("vec_id"), col("ne"))
+          .write.mode("overwrite").parquet(s"$fx/in")
+      }
       val tmp = Files.createTempDirectory("graft_ingest_run_").toString
-      val schema = s.read.parquet(in).schema
-      val q = s.readStream.schema(schema).parquet(in)
+      val schema = s.read.parquet(s"$in/in").schema
+      val q = s.readStream.schema(schema).parquet(s"$in/in")
         .withColumn("codes", Similarity.pqCodes(col("ne"), cb, Dims))
         .withColumn("dots", Similarity.centroidDots(col("ne"), cents))
         .withColumn("cells", Similarity.topCells(col("dots"), IvfAssignN))
@@ -732,7 +717,7 @@ object SimilarityQueries extends QueryPack {
     //      vectors arrive raw in two waves; per micro-batch each is
     //      normalized and probed map-side against the PLAN-LITERAL
     //      centroids, the probe set broadcasts into the standing
-    //      [[corpusCells]] inverted index (built once, cached — at
+    //      [[ivfArtifacts]] inverted index (built once, cached — at
     //      cluster scale, q73's cell-partitioned table), and the
     //      per-batch top-3 appends to the result log. The corpus is
     //      never re-assigned and never shuffles; batch latency is
@@ -740,16 +725,19 @@ object SimilarityQueries extends QueryPack {
     //      IVF search over the same cohort — streaming the queries must
     //      not change a single answer. ----
     "q111_stream_ann_search" -> ((s, d) => {
-      val inDir = annQueryFixture(s, d)
-      // cells BEFORE centroids: on the artifact restart path the index
-      // load seeds the centroid memo — the reverse order would re-train
-      // the matrix the artifact already carries
-      val idx = corpusCells(s, d)
-      val cents = centroids(s, d)
+      // the evaluation cohort's raw vectors, staged in two wave files
+      val in = Fixtures.dir(s, "annq", d) { fx =>
+        val cohort = Tables.embeddings(s, d)
+          .filter(isQuery(s, d)).select(col("vec_id"), col("embedding"))
+        Seq(0, 1).foreach(w => Fixtures.stage(
+          cohort.filter(col("vec_id") % 2 === w), fx, s"00${w}_wave.parquet",
+          format = "parquet"))
+      }
+      val (idx, cents) = ivfArtifacts(s, d)
       val tmp = Files.createTempDirectory("graft_annq_run_").toString
-      val schema = s.read.parquet(inDir).schema
+      val schema = s.read.parquet(s"$in/in").schema
       val q = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(inDir)
+        .option("maxFilesPerTrigger", 1).parquet(s"$in/in")
         .writeStream
         .foreachBatch { (batch: DataFrame, _: Long) =>
           val probes = Similarity.withNormalized(batch, "embedding")
@@ -791,29 +779,6 @@ object SimilarityQueries extends QueryPack {
         .orderBy(col("q_id"), col("rn"))
     })
   )
-
-  /** Staged (vec_id, raw embedding) parquet of the evaluation cohort in
-    * two wave files — the q111 stream input. Memoized per dir (paths
-    * only, safe across session restarts). */
-  private val annQueryFixCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-  private def annQueryFixture(s: SparkSession, d: String): String =
-    annQueryFixCache.getOrElseUpdate(d, {
-      val tmp = Files.createTempDirectory("graft_annq_in_").toString
-      val in = new java.io.File(s"$tmp/in"); in.mkdirs()
-      val cohort = Tables.embeddings(s, d)
-        .filter(isQuery(s, d)).select(col("vec_id"), col("embedding"))
-      Seq(0, 1).foreach { w =>
-        val st = s"$tmp/stage_$w"
-        cohort.filter(col("vec_id") % 2 === w)
-          .coalesce(1).write.mode("overwrite").parquet(st)
-        val part = new java.io.File(st).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        Files.move(part.toPath,
-          new java.io.File(in, f"00$w%s_wave.parquet").toPath)
-      }
-      s"$tmp/in"
-    })
 
   private val OutlierCos = 0.0 // flag vectors anti-correlated with their domain
 

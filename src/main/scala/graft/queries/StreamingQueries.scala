@@ -21,21 +21,45 @@ import java.util.UUID
   */
 object StreamingQueries extends QueryPack {
 
-  /** Memoized per-(kind, sfDir) fixture INPUT dirs: the JSON staging of
-    * `events` is identical on every invocation, so repeated runs (bench
-    * best-of-2, q57-style composition) reuse it and the timed region
-    * measures the STREAMING QUERY, not fixture I/O. Checkpoint/output
-    * dirs stay fresh per invocation — reusing a checkpoint would make
-    * the second run a no-op. (Unlike the DataFrame/catalog memos, this
-    * cache holds only on-disk paths — safe across session restarts.) */
-  private object Fixtures {
-    private val cache = scala.collection.concurrent.TrieMap.empty[String, String]
-    def dir(kind: String, d: String)(build: String => Unit): String =
-      cache.getOrElseUpdate(s"$kind|$d", {
+  /** Staged stream INPUT fixtures, one dir per (session, kind, sfDir):
+    * a fixture's files are identical on every invocation, so repeated
+    * runs (bench best-of-2) reuse them and the timed region measures the
+    * STREAMING QUERY, not fixture I/O. Checkpoint/output dirs stay fresh
+    * per invocation — reusing a checkpoint would make the second run a
+    * no-op. Entries are keyed on the CALLER's session (never a
+    * [[streamSession]] clone), so `GraftSession.close` releases them,
+    * and releasing an entry deletes the dir it staged. */
+  private[graft] object Fixtures {
+    private[graft] val cache = graft.runtime.FrameCache.of[
+        (SparkSession, String, String), String](
+      "stream-fixtures", k => Some(k._1))(fx => {
+        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(fx)); ()
+      })
+
+    /** The fixture root for (s, kind, d), staged by `build` on a miss. */
+    def dir(s: SparkSession, kind: String, d: String)(
+        build: String => Unit): String =
+      cache.get((s, kind, d)) {
         val tmp = Files.createTempDirectory(s"graft_${kind}_").toString
         build(tmp)
         tmp
-      })
+      }
+
+    /** Stage `df` as ONE file named `name` in `$fxRoot/in` — the
+      * ordered-arrival convention every stream fixture uses (coalesce(1)
+      * write, move the single part file to its arrival name). `format`
+      * is `json` (line-delimited), `text` (pre-serialized lines) or
+      * `parquet`. */
+    def stage(df: DataFrame, fxRoot: String, name: String,
+        format: String = "json"): Unit = {
+      val st = s"$fxRoot/stage_$name"
+      df.coalesce(1).write.mode("overwrite").format(format).save(st)
+      val ext = if (format == "text") ".txt" else s".$format"
+      val part = new java.io.File(st).listFiles()
+        .filter(_.getName.endsWith(ext)).head
+      val in = new java.io.File(s"$fxRoot/in"); in.mkdirs()
+      Files.move(part.toPath, new java.io.File(in, name).toPath)
+    }
   }
 
   /** Clone of `s` with state partitions sized to the stream's volume.
@@ -109,23 +133,6 @@ object StreamingQueries extends QueryPack {
     StructField("source", StringType),
     StructField("text", StringType)))
 
-  /** Stage `df` as ONE file named `name` in `inDir` — the ordered-
-    * arrival fixture convention every streaming query uses (coalesce(1)
-    * write, move the single part file to its arrival name). Default is
-    * line-delimited JSON; `format = "text"` stages pre-serialized lines
-    * (q107's deliberately-corrupt payloads). Shared so the staging
-    * convention cannot drift between queries. */
-  private def stageSingleFile(df: DataFrame, fxRoot: String,
-      inDir: java.io.File, name: String, format: String = "json"): Unit = {
-    val st = s"$fxRoot/stage_$name"
-    val ext = if (format == "text") ".txt" else ".json"
-    if (format == "text") df.coalesce(1).write.mode("overwrite").text(st)
-    else df.coalesce(1).write.mode("overwrite").json(st)
-    val part = new java.io.File(st).listFiles()
-      .filter(_.getName.endsWith(ext)).head
-    Files.move(part.toPath, new java.io.File(inDir, name).toPath)
-  }
-
   /** STANDING admission artifacts, memoized per (session, dir) like the
     * other shared frames: the q101 corpus (distinct content keys +
     * their bloom) and the q105 [[graft.ext.Dedup.NearDupIndex]]. A
@@ -190,7 +197,7 @@ object StreamingQueries extends QueryPack {
     //      Oracle = plain aggregation of the original (dedup must be
     //      semantically invisible). ----
     "q48_stream_dedup" -> ((s, d) => {
-      val in = Fixtures.dir("sdedup", d) { fx =>
+      val in = Fixtures.dir(s, "sdedup", d) { fx =>
         val ev = Tables.events(s, d)
           .select(col("event_id"), col("ts"), col("event_type"), col("value"))
         ev.write.mode("overwrite").json(s"$fx/in")
@@ -226,7 +233,7 @@ object StreamingQueries extends QueryPack {
     //      expire join state. Joined rows land in parquet via
     //      foreachBatch; the small final aggregate runs in batch. ----
     "q55_stream_stream_join" -> ((s, d) => {
-      val in = Fixtures.dir("ssj", d) { fx =>
+      val in = Fixtures.dir(s, "ssj", d) { fx =>
         Tables.events(s, d)
           .filter(col("event_type").isin("click", "purchase"))
           .select(col("ts"), col("user_id"), col("event_type"), col("value"))
@@ -266,18 +273,14 @@ object StreamingQueries extends QueryPack {
     //      (user_id = -1, present on both streams so both watermarks
     //      advance) are filtered from the result. ----
     "q58_stream_left_outer" -> ((s, d) => {
-      val fxDir = Fixtures.dir("sslo", d) { fx =>
+      val fxDir = Fixtures.dir(s, "sslo", d) { fx =>
         val ev = Tables.events(s, d)
           .filter(col("event_type").isin("click", "purchase"))
           .select(col("ts"), col("user_id"), col("event_type"), col("value"))
         val maxTs = ev.agg(max(col("ts"))).head.getTimestamp(0)
-        ev.coalesce(1).write.mode("overwrite").json(s"$fx/stage")
-        val in = new java.io.File(s"$fx/in"); in.mkdirs()
-        val part = new java.io.File(s"$fx/stage").listFiles()
-          .filter(_.getName.endsWith(".json")).head
-        val main = new java.io.File(in, "000_main.json")
-        Files.move(part.toPath, main.toPath)
-        val t0 = main.lastModified()
+        Fixtures.stage(ev, fx, "000_main.json")
+        val in = new java.io.File(s"$fx/in")
+        val t0 = new java.io.File(in, "000_main.json").lastModified()
         def sentinel(name: String, offMs: Long, modMs: Long): Unit = {
           val ts = java.time.Instant.ofEpochMilli(maxTs.getTime + offMs).toString
           val f = new java.io.File(in, name)
@@ -318,7 +321,7 @@ object StreamingQueries extends QueryPack {
     }),
 
     "q42_stream_tumbling" -> ((s, d) => {
-      val in = Fixtures.dir("stream", d) { fx =>
+      val in = Fixtures.dir(s, "stream", d) { fx =>
         Tables.events(s, d).write.mode("overwrite").json(s"$fx/in")
       }
       val tmp = Files.createTempDirectory("graft_stream_run_").toString
@@ -349,7 +352,7 @@ object StreamingQueries extends QueryPack {
     //      the window list per row before the keyed state). Same drain
     //      harness as q42; oracle assigns the 2 windows relationally. ----
     "q85_stream_sliding" -> ((s, d) => {
-      val in = Fixtures.dir("stream", d) { fx =>
+      val in = Fixtures.dir(s, "stream", d) { fx =>
         Tables.events(s, d).write.mode("overwrite").json(s"$fx/in")
       }
       val tmp = Files.createTempDirectory("graft_stream_run_").toString
@@ -383,24 +386,21 @@ object StreamingQueries extends QueryPack {
     //      is identical). Oracle rebuilds the final snapshot
     //      relationally. ----
     "q88_stream_upsert" -> ((s, d) => {
-      val fxDir = Fixtures.dir("cdc", d) { fx =>
+      val fxDir = Fixtures.dir(s, "cdc", d) { fx =>
         val base = Tables.orders(s, d)
           .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
         base.withColumn("version", lit(1L))
           .write.mode("overwrite").parquet(s"$fx/snap0")
-        val in = new java.io.File(s"$fx/in"); in.mkdirs()
-        def stage(df: DataFrame, name: String): Unit =
-          stageSingleFile(df, fx, in, name)
-        stage(base.filter(col("o_orderkey") % 7 === 0)
+        Fixtures.stage(base.filter(col("o_orderkey") % 7 === 0)
           .withColumn("o_orderstatus", lit("U"))
-          .withColumn("version", lit(2L)), "001_upd.json")
-        stage(base.filter(col("o_orderkey") % 13 === 0)
+          .withColumn("version", lit(2L)), fx, "001_upd.json")
+        Fixtures.stage(base.filter(col("o_orderkey") % 13 === 0)
           .withColumn("o_orderkey", col("o_orderkey") + lit(1000000000L))
           .withColumn("o_orderstatus", lit("N"))
           .withColumn("version", lit(2L))
           .unionByName(base.filter(col("o_orderkey") % 21 === 0)
             .withColumn("o_orderstatus", lit("W"))
-            .withColumn("version", lit(3L))), "002_ins.json")
+            .withColumn("version", lit(3L))), fx, "002_ins.json")
       }
       val tmp = Files.createTempDirectory("graft_cdc_run_").toString
       val ss = streamSession(s)
@@ -446,7 +446,7 @@ object StreamingQueries extends QueryPack {
     //      enriches against dimensions statically and reserves stateful
     //      joins for stream×stream. Same drain harness as q42. ----
     "q93_stream_static_join" -> ((s, d) => {
-      val in = Fixtures.dir("stream", d) { fx =>
+      val in = Fixtures.dir(s, "stream", d) { fx =>
         Tables.events(s, d).write.mode("overwrite").json(s"$fx/in")
       }
       val tmp = Files.createTempDirectory("graft_stream_run_").toString
@@ -481,14 +481,11 @@ object StreamingQueries extends QueryPack {
     //      so the oracle is the plain batch anti join; the split sizes
     //      are recorded in [[lastBloomStats]] for the spec. ----
     "q101_stream_bloom_dedup" -> ((s, d) => {
-      val fxDir = Fixtures.dir("blmdedup", d) { fx =>
+      val fxDir = Fixtures.dir(s, "blmdedup", d) { fx =>
         val delta = Tables.documents(s, d).filter(col("doc_id") % 7 === 3)
           .select(col("doc_id"), col("source"), col("text"))
-        val in = new java.io.File(s"$fx/in"); in.mkdirs()
-        def stage(df: DataFrame, name: String): Unit =
-          stageSingleFile(df, fx, in, name)
-        stage(delta.filter(col("doc_id") % 2 === 0), "001_even.json")
-        stage(delta.filter(col("doc_id") % 2 === 1), "002_odd.json")
+        Fixtures.stage(delta.filter(col("doc_id") % 2 === 0), fx, "001_even.json")
+        Fixtures.stage(delta.filter(col("doc_id") % 2 === 1), fx, "002_odd.json")
       }
       val tmp = Files.createTempDirectory("graft_blm_run_").toString
       val ss = streamSession(s)
@@ -557,14 +554,11 @@ object StreamingQueries extends QueryPack {
     //      (q80's CTE mirror) — admission is exactly "no verified
     //      near-dup pair against the corpus". ----
     "q105_stream_neardup_admission" -> ((s, d) => {
-      val fxDir = Fixtures.dir("nddedup", d) { fx =>
+      val fxDir = Fixtures.dir(s, "nddedup", d) { fx =>
         val delta = Tables.documents(s, d).filter(col("doc_id") % 9 === 4)
           .select(col("doc_id"), col("source"), col("text"))
-        val in = new java.io.File(s"$fx/in"); in.mkdirs()
-        def stage(df: DataFrame, name: String): Unit =
-          stageSingleFile(df, fx, in, name)
-        stage(delta.filter(col("doc_id") % 2 === 0), "001_even.json")
-        stage(delta.filter(col("doc_id") % 2 === 1), "002_odd.json")
+        Fixtures.stage(delta.filter(col("doc_id") % 2 === 0), fx, "001_even.json")
+        Fixtures.stage(delta.filter(col("doc_id") % 2 === 1), fx, "002_odd.json")
       }
       val tmp = Files.createTempDirectory("graft_nd_run_").toString
       val ss = streamSession(s)
@@ -613,24 +607,21 @@ object StreamingQueries extends QueryPack {
     //      same files), so the oracle recomputes both sides of the
     //      split from the documents table. ----
     "q107_dead_letter" -> ((s, d) => {
-      val fxDir = Fixtures.dir("deadletter", d) { fx =>
+      val fxDir = Fixtures.dir(s, "deadletter", d) { fx =>
         val delta = Tables.documents(s, d).filter(col("doc_id") % 11 === 5)
           .select(col("doc_id"), col("source"), col("text"))
-        val in = new java.io.File(s"$fx/in"); in.mkdirs()
-        def stage(df: DataFrame, name: String): Unit = {
-          val lines = df
-            .withColumn("value", when(col("doc_id") % 3 === 1,
-              // truncated mid-string — unparseable, whole row corrupt
-              concat(lit("{\"doc_id\":"), col("doc_id"),
-                lit(",\"source\":\""), col("source"),
-                lit("\",\"text\":\""), substring(col("text"), 1, 20)))
-              .otherwise(to_json(struct(col("doc_id"), col("source"),
-                col("text")))))
-            .select(col("value"))
-          stageSingleFile(lines, fx, in, name, format = "text")
+        val lines = delta.select(col("doc_id"),
+          when(col("doc_id") % 3 === 1,
+            // truncated mid-string — unparseable, whole row corrupt
+            concat(lit("{\"doc_id\":"), col("doc_id"),
+              lit(",\"source\":\""), col("source"),
+              lit("\",\"text\":\""), substring(col("text"), 1, 20)))
+            .otherwise(to_json(struct(col("doc_id"), col("source"),
+              col("text")))).as("value"))
+        Seq(0 -> "001_even.json", 1 -> "002_odd.json").foreach { case (p, name) =>
+          Fixtures.stage(lines.filter(col("doc_id") % 2 === p)
+            .select(col("value")), fx, name, format = "text")
         }
-        stage(delta.filter(col("doc_id") % 2 === 0), "001_even.json")
-        stage(delta.filter(col("doc_id") % 2 === 1), "002_odd.json")
       }
       val tmp = Files.createTempDirectory("graft_dl_run_").toString
       val ss = streamSession(s)

@@ -2,24 +2,24 @@ package graft.runtime
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Process-wide memo for expensive shared frames (the LSH pair set, the
-  * IVF inverted index, the curation-funnel stages, ...).
+/** The engine's one in-memory memo for values built once per corpus
+  * snapshot: shared cached frames (the LSH pair set, the IVF inverted
+  * index, the curation-funnel stages, ...), trained centroids and
+  * codebooks, and staged stream fixtures.
   *
-  * Two properties the bare `TrieMap.getOrElseUpdate` pattern lacked:
-  *
-  *  1. '''Single-build''': `getOrElseUpdate` on a concurrent map may run
-  *     the builder twice under racing suites and silently orphan one
-  *     cached frame (pinned executor memory nothing will ever
-  *     unpersist). Builds here run under a per-cache lock —
-  *     `computeIfAbsent` semantics. Builds are rare (a handful of keys
-  *     per process) and consumers hold the lock only on a miss, so the
-  *     coarse lock is not a throughput concern.
+  *  1. '''Single-build''': a key's builder runs exactly once, even under
+  *     racing callers — a second build would orphan a cached frame
+  *     (pinned executor memory nothing will ever unpersist). Builds run
+  *     under a per-cache lock — `computeIfAbsent` semantics. Builds are
+  *     rare (a handful of keys per process) and consumers hold the lock
+  *     only on a miss, so the coarse lock is not a throughput concern.
   *  2. '''Eviction''': every cache self-registers, so a long-lived
   *     session can drop what it no longer needs —
-  *     [[FrameCache.evictSession]] unpersists and forgets one session's
-  *     entries, [[FrameCache.evictStopped]] sweeps entries whose
-  *     session is already stopped (stale (session, dir) keys no longer
-  *     pin the process), and [[FrameCache.clearAll]] resets everything.
+  *     [[FrameCache.evictSession]] releases (unpersists, or deletes
+  *     what the entry staged) and forgets one session's entries,
+  *     [[FrameCache.evictStopped]] sweeps entries whose session is
+  *     already stopped (stale (session, dir) keys no longer pin the
+  *     process), and [[FrameCache.clearAll]] resets everything.
   *     Both properties are asserted in FrameCacheSpec.
   *
   * At cluster scale these memos are the "materialize once per corpus

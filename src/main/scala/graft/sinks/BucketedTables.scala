@@ -17,13 +17,10 @@ object BucketedTables {
 
   val Buckets = 8
 
-  // FrameCache, not TrieMap.getOrElseUpdate: the latter can run the
-  // builder CONCURRENTLY under racing suites — two threads both DROP +
-  // saveAsTable the same names into different temp dirs, one overwrite
-  // racing the other (the exact double-build defect FrameCache's
-  // scaladoc documents). Values are catalog names, so the unpersist
-  // hook is a no-op; staleness is handled by the catalog validation
-  // below, not eviction.
+  // Single-build: two racing callers must never both DROP + saveAsTable
+  // the same names into different temp dirs. Values are catalog names,
+  // so release is a no-op; staleness is handled by the catalog
+  // validation below, not eviction.
   private val cache = graft.runtime.FrameCache.of[String, (String, String)](
     "bucketed-tables", _ => None)(_ => ())
 

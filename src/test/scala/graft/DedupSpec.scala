@@ -37,7 +37,10 @@ class DedupSpec extends AnyFunSuite with BeforeAndAfterAll {
     // any permutation of the input arrays.
     val rnd = new scala.util.Random(41)
     val rows = Seq.fill(100) {
-      val a = Seq.fill(30)(rnd.nextLong()).distinct
+      // production operand domain: hs values reduced into [0, MinhashP)
+      // before the signature (y is drawn from x, so both arrays are)
+      val a = Seq.fill(30)(Math.floorMod(rnd.nextLong(), Dedup.MinhashP))
+        .distinct
       (a, rnd.shuffle(a.drop(rnd.nextInt(10))))
     }
     val df = rows.toDF("x", "y")

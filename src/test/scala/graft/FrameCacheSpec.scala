@@ -4,14 +4,16 @@ import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.storage.StorageLevel
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.queries.{SimilarityQueries, StreamingQueries}
 import graft.runtime.FrameCache
 
-/** The two properties FrameCache adds over a bare concurrent-map memo:
-  * a racing build runs ONCE (no orphaned cached frames pinning executor
-  * memory), and eviction actually unpersists what it drops. */
+/** FrameCache's contract: a racing build runs ONCE (no orphaned cached
+  * frames pinning executor memory), eviction actually releases what it
+  * drops, and `GraftSession.close` reaches every memo a session owns. */
 class FrameCacheSpec extends AnyFunSuite {
   private lazy val spark = GraftSession.local(4)
 
@@ -91,5 +93,33 @@ class FrameCacheSpec extends AnyFunSuite {
       "close bled into another session's entries")
     assert(cacheA.size == 1 && cacheB.size == 0)
     cacheA.evict(_ => true)
+  }
+
+  test("GraftSession.close releases query memos and deletes staged fixtures") {
+    val sf = "/root/testdata/sf0.001"
+    def run(s: SparkSession, q: String) =
+      SparkEntry.queries(q)(s, sf).collect().map(_.toSeq).toSeq
+    val s1 = spark.newSession()
+    val q42 = run(s1, "q42_stream_tumbling")
+    val q50 = run(s1, "q50_ann_ivf")
+    val staged = StreamingQueries.Fixtures.cache.peek((s1, "stream", sf))
+    assert(staged.exists(new java.io.File(_).isDirectory),
+      "q42 did not stage its input through the fixture memo")
+    assert(SimilarityQueries.centCache.peek((s1, sf)).isDefined)
+    assert(SimilarityQueries.modCache.peek((s1, sf)).isDefined)
+
+    GraftSession.close(s1)
+    assert(StreamingQueries.Fixtures.cache.peek((s1, "stream", sf)).isEmpty)
+    assert(SimilarityQueries.centCache.peek((s1, sf)).isEmpty)
+    assert(SimilarityQueries.modCache.peek((s1, sf)).isEmpty)
+    assert(!new java.io.File(staged.get).exists(),
+      "closing the session left its staged fixture dir on disk")
+
+    // a second session over the same dir rebuilds and answers identically
+    val s2 = spark.newSession()
+    try {
+      assert(run(s2, "q42_stream_tumbling") == q42)
+      assert(run(s2, "q50_ann_ivf") == q50)
+    } finally GraftSession.close(s2)
   }
 }
